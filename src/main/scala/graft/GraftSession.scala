@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetSchemas
 
 /** Session factory with scale-sane defaults.
   *
@@ -43,14 +44,14 @@ object GraftSession {
       // same per-task memory an aggregation map uses; AQE's skew-join
       // splitting covers SHJ too). Sort-merge's two full sorts are
       // memory-bandwidth-bound and dominate fact-to-fact join cost at
-      // scale: measured on the sf10 ladder (60M lineitem, 32 threads),
-      // q7's final join stage costs 307 CPU-s under SMJ vs 16 CPU-s
-      // under SHJ (q7 wall 26.3→4.3 s, q3 29→2.7 s, q10 19→4.6 s) —
-      // the hash build+probe touches each row once instead of
-      // sort-shuffling both sides. This is the same strategy choice
-      // the vectorized engines make (hash joins, never merge) and it
-      // holds at cluster scale: build-side volume per partition stays
-      // bounded by the threshold regardless of total data size.
+      // scale: the hash build+probe touches each row once instead of
+      // sort-shuffling both sides. Measured value: BASELINE.md's
+      // "SHJ-vs-SMJ A/B at sf10" table (60M lineitem) — q3 3.5×
+      // faster under SHJ, q5/q7 ~10-15%, q9/q10 even. This is the
+      // same strategy choice the vectorized engines make (hash joins,
+      // never merge) and it holds at cluster scale: build-side volume
+      // per partition stays bounded by the threshold regardless of
+      // total data size.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       // AQE may additionally rewrite a planned sort-merge join to a
       // shuffled-hash join from MEASURED post-shuffle partition sizes
@@ -72,9 +73,11 @@ object GraftSession {
   def getOrCreate(): SparkSession = builder().getOrCreate()
 }
 
-/** Loaders for the test corpus tables (TESTDATA.md). Plain
-  * `spark.read.parquet` relations so Catalyst pushes filters and
-  * prunes columns down to the scan.
+/** Loaders for the test corpus tables (TESTDATA.md). Plain parquet
+  * relations so Catalyst pushes filters and prunes columns down to
+  * the scan; the schema resolves on the driver from the file's footer
+  * ([[org.apache.spark.sql.graftbridge.ParquetSchemas]]), so loading
+  * a table launches no schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
@@ -82,7 +85,7 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else ParquetSchemas.read(spark, s"$dir/$name.parquet")
   }
 
   /** The events table's `ts` physical type has varied across corpus
@@ -95,7 +98,7 @@ object Tables {
     * with identical downstream semantics. */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = ParquetSchemas.read(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {

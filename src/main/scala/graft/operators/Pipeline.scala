@@ -493,17 +493,38 @@ object Pipeline {
     * Fresh threads per call (not a shared pool): callers overlap 2-3
     * store writes, and a pool built once would freeze whichever
     * caller's inheritable thread-locals (job group/description) it was
-    * created under. Every task runs to completion; the first failure
-    * is rethrown only after ALL finish, so a caller never proceeds to
-    * a downstream step while a sibling write is still in flight. */
-  private[operators] def inParallel(tasks: (() => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    * created under.
+    *
+    * Failures: every task runs to completion and the first NON-FATAL
+    * failure is rethrown only after ALL finish, every sibling failure
+    * attached with `addSuppressed` — a caller never proceeds to a
+    * downstream step while a sibling write is still in flight, and no
+    * diagnostic is dropped. A fatal error or an interrupt in a task is
+    * not caught there: it escapes the task's thread and the caller
+    * rethrows it at once (as it does its own interrupt), interrupting
+    * the other task threads. */
+  private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
+    // one outcome per finished task: None = success, Some = its failure
+    val done = new java.util.concurrent.LinkedBlockingQueue[Option[Throwable]]()
     val threads = tasks.map { t =>
-      val th = new Thread(() => try t() catch { case e: Throwable => errs.add(e) })
+      val th = new Thread(() => done.put(
+        try { t(); None } catch { case scala.util.control.NonFatal(e) => Some(e) }))
+      th.setUncaughtExceptionHandler((_, e) => done.put(Some(e)))
       th.start(); th
     }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    val errs = scala.collection.mutable.ArrayBuffer.empty[Throwable]
+    try tasks.indices.foreach(_ => done.take().foreach { e =>
+      if (!scala.util.control.NonFatal(e)) throw e
+      errs += e
+    }) catch {
+      case e: Throwable if !scala.util.control.NonFatal(e) =>
+        threads.foreach(_.interrupt())
+        throw e
+    }
+    errs.headOption.foreach { first =>
+      errs.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Stages 1–2 of corpus preparation (quality gate + PII scrub) —

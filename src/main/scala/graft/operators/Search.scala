@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{TopKAggregate, TextFunctions => T}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemas
 
 /** Keyword search over the document corpus: the inverted-index
   * term-frequency relation and BM25-ranked retrieval — the text-side
@@ -273,7 +274,7 @@ object Search {
         .partitionBy("__bucket").parquet(s"$path/postings")
       docLens(occ, idCol)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/docs")
-      statsFromDocLens(docs.sparkSession.read.parquet(s"$path/docs"), nBuckets, epoch)
+      statsFromDocLens(ParquetSchemas.read(docs.sparkSession, s"$path/docs"), nBuckets, epoch)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/stats")
     } finally { occ.unpersist(); () }
     Seq("deleted", "_commits", "_staging").foreach(d =>
@@ -294,7 +295,7 @@ object Search {
     def epochAt(p: String): Option[Long] =
       if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
       else scala.util.Try(
-        spark.read.parquet(p).collect()(0).getAs[Long]("epoch")).toOption
+        ParquetSchemas.read(spark, p).collect()(0).getAs[Long]("epoch")).toOption
     epochAt(s"$path/stats").orElse(epochAt(s"$path/stats__old")).getOrElse(-1L)
   }
 
@@ -339,7 +340,7 @@ object Search {
 
   private def statsRow(spark: org.apache.spark.sql.SparkSession,
                        path: String): org.apache.spark.sql.Row =
-    spark.read.parquet(s"$path/stats").collect()(0)
+    ParquetSchemas.read(spark, s"$path/stats").collect()(0)
 
   /** Append a crawl batch to a persisted postings index — the
     * [[graft.operators.Similarity.appendIvfIndex]] shape for text:
@@ -452,7 +453,7 @@ object Search {
         ()
       }),
       "stage-stats" -> (() => {
-        val d = spark.read.parquet(s"$stage/docs")
+        val d = ParquetSchemas.read(spark, s"$stage/docs")
           .agg(count(lit(1)).cast("long").as("n"),
             coalesce(sum(col("doc_len")), lit(0L)).as("t")).collect()(0)
         spark.createDataFrame(Seq((st.getAs[Long]("n_docs") + d.getLong(0),
@@ -502,7 +503,7 @@ object Search {
         }.exists(identity)
         if (touched || statsSwapBegun) {
           val st = statsRow(spark, path)
-          statsFromDocLens(spark.read.parquet(s"$path/docs"),
+          statsFromDocLens(ParquetSchemas.read(spark, s"$path/docs"),
               st.getAs[Int]("n_buckets"), st.getAs[Long]("epoch"))
             .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(s"$path/stats__staging")
@@ -561,7 +562,7 @@ object Search {
     * postings relation. */
   private[graft] def victimRelation(spark: org.apache.spark.sql.SparkSession,
                                     path: String): DataFrame =
-    spark.read.parquet(s"$path/docs")
+    ParquetSchemas.read(spark, s"$path/docs")
 
   /** The filesystem OWNING `path` — never the default FS: an index on
     * s3a:// or hdfs:// with a file:// default would otherwise probe
@@ -574,7 +575,7 @@ object Search {
   private def tombstones(spark: org.apache.spark.sql.SparkSession,
                          path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/deleted")
-    if (fsOf(spark, path).exists(p)) Some(spark.read.parquet(p.toString)) else None
+    if (fsOf(spark, path).exists(p)) Some(ParquetSchemas.read(spark, p.toString)) else None
   }
 
   /** Tombstones the query path must apply: only those written under
@@ -705,22 +706,22 @@ object Search {
     val deadIds = broadcast(dead.select(col(idColName)))
     Seq(
       "stage-postings" -> (() =>
-        spark.read.parquet(s"$path/postings")
+        ParquetSchemas.read(spark, s"$path/postings")
           .join(deadIds, Seq(idColName), "left_anti")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("__bucket").parquet(s"$path/postings__staging")),
       "stage-positions" -> (() =>
-        spark.read.parquet(s"$path/positions")
+        ParquetSchemas.read(spark, s"$path/positions")
           .join(deadIds, Seq(idColName), "left_anti")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy("__bucket").parquet(s"$path/positions__staging")),
       "stage-docs" -> (() =>
-        spark.read.parquet(s"$path/docs")
+        ParquetSchemas.read(spark, s"$path/docs")
           .join(deadIds, Seq(idColName), "left_anti")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/docs__staging")),
       "stage-stats" -> (() =>
-        statsFromDocLens(spark.read.parquet(s"$path/docs__staging"), nBuckets, epoch + 1)
+        statsFromDocLens(ParquetSchemas.read(spark, s"$path/docs__staging"), nBuckets, epoch + 1)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$path/stats__staging")),
     ) ++ swapSteps(fs, path, "postings") ++ swapSteps(fs, path, "positions") ++
@@ -772,7 +773,7 @@ object Search {
     val st =
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats")) &&
           fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats__old")))
-        spark.read.parquet(s"$path/stats__old").collect()(0)
+        ParquetSchemas.read(spark, s"$path/stats__old").collect()(0)
       else statsRow(spark, path)
     val epoch = st.getAs[Long]("epoch")
     val (nDel, tokDel) = currentTombstones(spark, path, epoch).fold((0L, 0L)) { t =>
@@ -798,11 +799,15 @@ object Search {
     * [[buildPostingsIndex]]) — output bit-identical to [[bm25TopK]]
     * over the same corpus (gate-shared oracle, the sim_ivf_index
     * argument). The query-term bucket set is evaluated through the
-    * same xxhash64 expression the build used (a 1-row Spark job — no
-    * driver-side hash reimplementation to drift) and applied as a
-    * static partition filter: only ≤ |terms| of the nBuckets
-    * partitions are listed and read; df comes from the pruned
-    * postings themselves (a term's df needs only that term's rows).
+    * same xxhash64 expression the build used (folded on the driver —
+    * no job, and no driver-side hash reimplementation to drift) and
+    * applied as a static partition filter: only ≤ |terms| of the
+    * nBuckets partitions are listed and read; df comes from the
+    * pruned postings themselves (a term's df needs only that term's
+    * rows). The builder's only eager jobs are the stats-row collect
+    * and, on a tombstoned index, the tombstone-totals collect: every
+    * relation schema resolves on the driver (see
+    * [[org.apache.spark.sql.graftbridge.ParquetSchemas]]).
     * Output: (term, idCol, score, rank). */
   def queryPostingsIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                          idCol: String, terms: Seq[String], k: Int,
@@ -843,7 +848,7 @@ object Search {
     }
     val nDocs = st.getAs[Long]("n_docs") - nDel
     val totalTokens = st.getAs[Long]("total_tokens") - tokDel
-    val tf = prunedRelation(spark, path, "postings", idCol, terms, nBuckets, epoch)
+    val tf = prunedRelation(spark, path, "postings", idCol, terms, nBuckets, dead)
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // exact-integer stats -> the same doubles the from-scratch scorer
     // sees: N as a long literal, avgdl = exact-sum / count
@@ -860,20 +865,21 @@ object Search {
     * bucket hashing or tombstone filtering must hit BM25 and the
     * positional queries identically — they exclude the same docs or
     * silently drift): query-term buckets evaluated through the same
-    * stored xxhash64 expression (a 1-row Spark job — no driver-side
-    * hash reimplementation), applied as a static partition filter
-    * (≤ |terms| of the nBuckets partitions listed), exact-term
-    * filtered, CURRENT-epoch tombstoned docs anti-joined out. */
+    * stored xxhash64 expression (a projection over a local relation,
+    * which Spark folds on the driver — no job, and no driver-side hash
+    * reimplementation), only those buckets' partition dirs listed and
+    * read, the static partition filter kept, exact-term filtered, the
+    * caller's CURRENT-epoch tombstones (`dead`, read once per query)
+    * anti-joined out. */
   private def prunedRelation(spark: org.apache.spark.sql.SparkSession, path: String,
-                             relation: String, idCol: String,
-                             terms: Seq[String], nBuckets: Int, epoch: Long): DataFrame = {
+                             relation: String, idCol: String, terms: Seq[String],
+                             nBuckets: Int, dead: Option[DataFrame]): DataFrame = {
     val buckets = spark.createDataFrame(terms.map(Tuple1(_))).toDF("t")
-      .select(pmod(xxhash64(col("t")), lit(nBuckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0))
-    val rel = spark.read.parquet(s"$path/$relation")
-      .filter(col("__bucket").isin(buckets.map(Int.box): _*))
+      .select(pmod(xxhash64(col("t")), lit(nBuckets.toLong)).cast("int"))
+      .collect().map(_.getInt(0)).distinct.toSeq
+    val rel = StoreProtocol.probedRead(spark, s"$path/$relation", "__bucket", buckets)
       .filter(col("term").isin(terms: _*))
-    currentTombstones(spark, path, epoch).fold(rel)(t =>
+    dead.fold(rel)(t =>
       rel.join(broadcast(t.select(col(idCol))), Seq(idCol), "left_anti"))
   }
 
@@ -884,8 +890,8 @@ object Search {
                                  path: String, idCol: String,
                                  terms: Seq[String]): DataFrame = {
     val st = statsRow(spark, path)
-    prunedRelation(spark, path, "positions", idCol, terms,
-        st.getAs[Int]("n_buckets"), st.getAs[Long]("epoch"))
+    prunedRelation(spark, path, "positions", idCol, terms, st.getAs[Int]("n_buckets"),
+        currentTombstones(spark, path, st.getAs[Long]("epoch")))
       .select(col(idCol), col("__pos"), col("term"))
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{TopKAggregate, VectorExpressions, VectorFunctions => V}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemas
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -128,6 +129,18 @@ object Similarity {
         V.cosineRounded(col(vecCol), col(qvecCol)).as("score"))
   }
 
+  /** The distinct cells a query batch probes, through the same
+    * NearestCentroids projection [[probeCells]] joins on. Collected
+    * as one array per query and flattened on the driver: over a local
+    * query frame Spark folds the projection into the local relation,
+    * so no job runs (an explode+distinct would plan a shuffle). */
+  private def probedCells(queries: DataFrame, qvecCol: String, centroidsFlat: Array[Double],
+                          dim: Int, nProbe: Int): Seq[Int] =
+    queries.select(VectorExpressions.nearestCentroids(col(qvecCol), centroidsFlat, dim,
+        centroidsFlat.length / dim, nProbe))
+      .collect().flatMap(r => if (r.isNullAt(0)) Nil else r.getSeq[Int](0))
+      .distinct.toSeq
+
   /** All-corpus kNN graph: for EVERY vector, its k nearest neighbors
     * among LSH-bucket candidates — the self-join generalization of
     * [[lshTopK]] (whose query side must be small enough to broadcast;
@@ -181,10 +194,15 @@ object Similarity {
     // threads (guide §2.6) so the build pays ~one corpus-pass wall
     // instead of three sequential ones. A fresh build has no crash
     // contract between them (a crash = rerun the build; `_driftbase`
-    // has no `=` in its name, so partition discovery skips it).
+    // has no `=` in its name, so partition discovery skips it). The
+    // prior store is dropped BEFORE the group and the index write
+    // appends into the emptied root: an Overwrite would truncate the
+    // root at its job start and could wipe a `_driftbase` relation a
+    // sibling thread had already written.
+    StoreProtocol.fsOf(corpus.sparkSession, path).delete(new org.apache.hadoop.fs.Path(path), true)
     val writeIndex = () => {
       corpus.withColumn("__cell", element_at(cell1, 1))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__cell").parquet(path)
       ()
     }
@@ -372,7 +390,7 @@ object Similarity {
                                         path: String, deleteIds: DataFrame, idCol: String)
       : (Array[Int], Seq[(String, () => Unit)]) = {
     val fs = StoreProtocol.fsOf(spark, path)
-    val idx = spark.read.parquet(path)
+    val idx = ParquetSchemas.read(spark, path)
     val dels = broadcast(deleteIds.select(col(idCol)).distinct())
     val touched = idx.select(col(idCol), col("__cell"))
       .join(dels, Seq(idCol), "left_semi")
@@ -444,7 +462,7 @@ object Similarity {
     // must stay readable in exactly the state it exists to surface
     val nVectors =
       if (cellDirs.isEmpty) 0L
-      else spark.read.option("basePath", statsRoot)
+      else ParquetSchemas.reader(spark, statsRoot).option("basePath", statsRoot)
         .parquet(cellDirs.map(_.getPath.toString).toSeq: _*).count()
     val (replayHw, replayIds) = StoreProtocol.readLedger(fs, statsRoot)
     spark.createDataFrame(Seq((nVectors,
@@ -457,21 +475,21 @@ object Similarity {
 
   /** Query a persisted IVF index (see [[buildIvfIndex]]). The probed
     * cell set (≤ nQueries × nProbe values — tiny by the small-query-
-    * batch contract, one driver collect like the centroids) is applied
-    * as a STATIC partition filter on the index scan, so only those
-    * cells' files are read (`PartitionFilters` in the plan — proven
-    * via numFiles in the spec). Static beats relying on dynamic
-    * partition pruning here: DPP's cost heuristic can decline exactly
-    * when the batch is small, which is the common case. */
+    * batch contract, see [[probedCells]]) selects the cell dirs that
+    * are listed and read, under a STATIC partition filter on the index
+    * scan, so only those cells' files are read (`PartitionFilters` in
+    * the plan — proven via numFiles in the spec). Static beats relying
+    * on dynamic partition pruning here: DPP's cost heuristic can
+    * decline exactly when the batch is small, which is the common
+    * case. Over a local query frame the builder launches no job: the
+    * probe set folds on the driver and the index schema resolves from
+    * one footer. */
   def queryIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     centroidsFlat: Array[Double], queries: DataFrame,
                     idCol: String, vecCol: String, qidCol: String, qvecCol: String,
                     k: Int, dim: Int, nProbe: Int = 4): DataFrame = {
-    val c = centroidsFlat.length / dim
-    val probed = queries
-      .select(explode(VectorExpressions.nearestCentroids(col(qvecCol), centroidsFlat, dim, c, nProbe)).as("__cell"))
-      .distinct().collect().map(_.getInt(0))
-    val cells = spark.read.parquet(path).filter(col("__cell").isin(probed.map(Int.box): _*))
+    val cells = StoreProtocol.probedRead(spark, path, "__cell",
+      probedCells(queries, qvecCol, centroidsFlat, dim, nProbe))
     val scored = probeCells(cells, queries, idCol, vecCol, qidCol, qvecCol,
       centroidsFlat, dim, nProbe)
     rankTopK(scored, idCol, qidCol, k)
@@ -717,19 +735,17 @@ object Similarity {
                       qidCol: String, qvecCol: String, k: Int, dim: Int,
                       nProbe: Int = 4, rescore: Int = 20): DataFrame = {
     val c = centroidsFlat.length / dim
-    val probed = queries
-      .select(explode(VectorExpressions.nearestCentroids(col(qvecCol), centroidsFlat, dim, c, nProbe)).as("__cell"))
-      .distinct().collect().map(_.getInt(0)).map(Int.box).toSeq
+    val probed = probedCells(queries, qvecCol, centroidsFlat, dim, nProbe)
     val qb = broadcast(queries.select(col(qidCol), col(qvecCol),
       explode(VectorExpressions.nearestCentroids(col(qvecCol), centroidsFlat, dim, c, nProbe)).as("__cell")))
     val approx = Quantize.pqDecodeCol(
-        spark.read.parquet(s"$path/codes").filter(col("__cell").isin(probed: _*))
+        StoreProtocol.probedRead(spark, s"$path/codes", "__cell", probed)
           .join(qb, "__cell"), "codes", codebooks, dim)
       .select(col(qidCol), col(idCol),
         V.cosineRounded(col("__dec"), col(qvecCol)).as("score"))
     val shortlist = rankTopK(approx, idCol, qidCol, rescore)
       .select(col(qidCol), col(idCol))
-    val exact = spark.read.parquet(s"$path/vectors").filter(col("__cell").isin(probed: _*))
+    val exact = StoreProtocol.probedRead(spark, s"$path/vectors", "__cell", probed)
       .select(col(idCol), col(vecCol))
       .join(broadcast(shortlist), idCol)
       .join(broadcast(queries.select(col(qidCol), col(qvecCol))), qidCol)
@@ -758,7 +774,7 @@ object Similarity {
       .count(b => !StoreProtocol.isCommitted(fs, path, b))
     val nVectors =
       if (cellDirs.isEmpty) 0L
-      else spark.read.option("basePath", codesDir.toString)
+      else ParquetSchemas.reader(spark, codesDir.toString).option("basePath", codesDir.toString)
         .parquet(cellDirs.map(_.getPath.toString).toSeq: _*).count()
     val (replayHw, replayIds) = StoreProtocol.readLedger(fs, path)
     spark.createDataFrame(Seq((nVectors, cellDirs.length.toLong, nFiles.toLong,
@@ -809,18 +825,6 @@ object Similarity {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/_driftbase/scalar"))
 
-  /** Read the LIVE cell partitions of a store relation with basePath —
-    * the health-probe discipline: a pending `_old__cell=N` swap dir
-    * must not fail the read it exists to be surfaced by. */
-  private def liveCellRead(spark: org.apache.spark.sql.SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem, rel: String): Option[DataFrame] = {
-    val base = new org.apache.hadoop.fs.Path(rel)
-    if (!fs.exists(base)) return None
-    val dirs = fs.listStatus(base).filter(_.getPath.getName.startsWith("__cell="))
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", rel).parquet(dirs.map(_.getPath.toString).toSeq: _*))
-  }
-
   /** Evidence-based re-cluster decision for a persisted IVF store
     * (raw [[buildIvfIndex]] layout, or `pq = true` for the
     * [[buildIvfPqIndex]] two-relation layout). Two aggregate-only
@@ -849,7 +853,7 @@ object Similarity {
       else path
     val cellsRel = if (pq) s"$root/codes" else root
     val vecsRel = if (pq) s"$root/vectors" else root
-    val sizes = liveCellRead(spark, fs, cellsRel)
+    val sizes = StoreProtocol.livePartitionRead(spark, cellsRel)
       .map(_.groupBy(col("__cell")).count()
         .agg(count(lit(1)).cast("long"), coalesce(sum(col("count")), lit(0L)),
           coalesce(max(col("count")), lit(0L))).collect()(0))
@@ -857,11 +861,11 @@ object Similarity {
     val skew = if (nCells == 0 || nVec == 0) 0.0
       else math.rint(mxCell.toDouble * nCells / nVec * 1e6) / 1e6
     val hasBase = fs.exists(new org.apache.hadoop.fs.Path(s"$root/_driftbase/scalar"))
-    val cur = liveCellRead(spark, fs, vecsRel)
+    val cur = StoreProtocol.livePartitionRead(spark, vecsRel)
     val (cos, normRatio) =
       if (!hasBase || cur.isEmpty) (Double.NaN, Double.NaN)
       else {
-        val cosV = spark.read.parquet(s"$root/_driftbase/dims")
+        val cosV = ParquetSchemas.read(spark, s"$root/_driftbase/dims")
           .join(Quality.driftDimSums(cur.get, vecCol, "c"), "__i")
           .agg(sum(col("__sb") * col("__sc")).as("__dot"),
             sum(col("__sb") * col("__sb")).as("__nb"),
@@ -869,7 +873,7 @@ object Similarity {
           .select(round(col("__dot").cast("double") /
             (sqrt(col("__nb").cast("double")) * sqrt(col("__nc").cast("double"))), 6))
           .collect()(0).getDouble(0)
-        val b = spark.read.parquet(s"$root/_driftbase/scalar").collect()(0)
+        val b = ParquetSchemas.read(spark, s"$root/_driftbase/scalar").collect()(0)
         val c = Quality.driftScalarStats(cur.get, vecCol, "cur").collect()(0)
         val msBase = b.getDecimal(1).doubleValue / b.getLong(0)
         val msCur = c.getDecimal(1).doubleValue / c.getLong(0)
@@ -954,7 +958,7 @@ object Similarity {
     val base = new org.apache.hadoop.fs.Path(path)
     val rebuild = new org.apache.hadoop.fs.Path(path + "__rebuild")
     val old = new org.apache.hadoop.fs.Path(path + "__old")
-    val corpus = liveCellRead(spark, fs, path)
+    val corpus = StoreProtocol.livePartitionRead(spark, path)
       .getOrElse(throw new java.io.IOException(s"ivf rebuild: no live cells under $path"))
       .drop("__cell")
     val flat = sampleCentroids(corpus, idCol, vecCol, dim, nCentroids, seed, sampleKey)

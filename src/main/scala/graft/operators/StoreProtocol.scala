@@ -359,6 +359,45 @@ private[graft] object StoreProtocol {
     else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
+  /** Read the LIVE `<partCol>=v` partition dirs of a store relation
+    * with basePath (the partition column is kept; the schema resolves
+    * on the driver) — None when there is none. The health-probe
+    * discipline: a pending `_old<partCol>=v` swap dir must not fail
+    * the maintenance read it exists to be surfaced by. `only`
+    * restricts the read to those values: one listing of the root's
+    * entry names, then only the chosen dirs are listed — never the
+    * files of the other partitions. With `only`, a pending swap of a
+    * requested partition yields None too, so [[probedRead]] falls back
+    * to the root read, which fails loudly as it always did. */
+  def livePartitionRead(spark: org.apache.spark.sql.SparkSession, rel: String,
+                        partCol: String = "__cell",
+                        only: Option[Seq[Int]] = None): Option[org.apache.spark.sql.DataFrame] = {
+    val fs = fsOf(spark, rel)
+    val base = new Path(rel)
+    if (!fs.exists(base)) return None
+    val names = fs.listStatus(base).filter(_.isDirectory).map(_.getPath.getName)
+    val dirs = only match {
+      case None => names.filter(_.startsWith(s"$partCol=")).sorted.toSeq
+      case Some(vs) =>
+        if (vs.exists(v => names.contains(s"_old$partCol=$v"))) Nil
+        else vs.distinct.sorted.map(v => s"$partCol=$v").filter(names.contains)
+    }
+    if (dirs.isEmpty) None
+    else Some(org.apache.spark.sql.graftbridge.ParquetSchemas.reader(spark, s"$rel/${dirs.head}")
+      .option("basePath", rel).parquet(dirs.map(d => s"$rel/$d"): _*))
+  }
+
+  /** The query-path read of a partitioned store relation: only the
+    * probed partitions' dirs are listed and read, under the same
+    * static partition filter as a root read. When none of them exists,
+    * or one has a pending swap, it is the plain root read (the same
+    * empty result, the same loud errors). */
+  def probedRead(spark: org.apache.spark.sql.SparkSession, rel: String, partCol: String,
+                 values: Seq[Int]): org.apache.spark.sql.DataFrame =
+    livePartitionRead(spark, rel, partCol, Some(values))
+      .getOrElse(org.apache.spark.sql.graftbridge.ParquetSchemas.read(spark, rel))
+      .filter(org.apache.spark.sql.functions.col(partCol).isin(values.map(Int.box): _*))
+
   /** Rename every data file under `staging` into `live`, mirroring
     * partition subdirectories (`name=value`) and prefixing each file
     * with `b<batchId>-`. Metadata files (`_SUCCESS`, dot-files) are

@@ -868,4 +868,24 @@ class PipelineSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set(11L -> 10L, 100L -> 10L, 130L -> 30L, 200L -> 120L))
   }
+
+  test("inParallel: every sibling failure reaches the caller; a fatal error is rethrown at once") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[RuntimeException](Pipeline.inParallel(
+      () => throw new RuntimeException("first write failed"),
+      () => { Thread.sleep(200); slowDone.set(true) },
+      () => throw new IllegalStateException("second write failed")))
+    // non-fatal failures wait for every sibling, then surface together
+    assert(slowDone.get, "rethrown before a sibling finished")
+    assert((e +: e.getSuppressed.toSeq).map(_.getMessage).toSet ==
+      Set("first write failed", "second write failed"))
+    // a fatal error is not collected: it escapes its task and the
+    // caller rethrows it without waiting for the slow sibling
+    val t0 = System.nanoTime()
+    val fatal = intercept[StackOverflowError](Pipeline.inParallel(
+      () => throw new StackOverflowError("fatal in a task"),
+      () => Thread.sleep(5000)))
+    assert(fatal.getMessage == "fatal in a task")
+    assert((System.nanoTime() - t0) / 1e9 < 4.0, "waited for the sibling after a fatal error")
+  }
 }

@@ -652,6 +652,26 @@ class SimilaritySpec extends SparkSpec {
     assert(fromStore.collect().map(_.toSeq).toSet == inMemory.collect().map(_.toSeq).toSet)
   }
 
+  test("buildIvfIndex over an existing store: the parallel index write never wipes _driftbase") {
+    val emb = tinyVectors
+    val path = java.nio.file.Files.createTempDirectory("graft_ivfrebuildover").toString + "/idx"
+    val c0 = Similarity.buildIvfIndex(emb, path, "vec_id", "embedding", dim = 8, nCentroids = 4)
+    Similarity.appendIvfIndex(emb.select((col("vec_id") + 100L).as("vec_id"), col("embedding")),
+      path, c0, "embedding", dim = 8, batchId = "old1")
+    // rebuilt over the prior store, several times: each build must
+    // leave a fresh store (no prior batch) WITH its drift snapshot
+    (1 to 3).foreach { i =>
+      Similarity.buildIvfIndex(emb, path, "vec_id", "embedding", dim = 8, nCentroids = 4)
+      Seq("dims", "scalar").foreach(r => assert(
+        new java.io.File(s"$path/_driftbase/$r").isDirectory, s"build $i lost _driftbase/$r"))
+      assert(!new java.io.File(s"$path/_commits").exists(), s"build $i kept the prior store's markers")
+      assert(spark.read.parquet(path).count() == 40L, s"build $i")
+      val d = Similarity.ivfMaintenanceDecision(spark, path, "embedding").collect()(0)
+      assert(d.getAs[String]("reason") == "healthy", s"build $i: ${d.getAs[String]("reason")}")
+      assert(!d.getAs[Double]("centroid_cosine").isNaN, s"build $i: drift unmeasured")
+    }
+  }
+
   test("rebuildIvfIndex crash property: retry converges at every step boundary; replay ledger survives the rebuild") {
     val emb = tinyVectors
     val root = java.nio.file.Files.createTempDirectory("graft_ivfrebuild").toString
